@@ -232,13 +232,14 @@ UNITS = {
 
 
 def call_counters(rec: Recorder, call: str, logs: dict[str, GroupLog] | None = None) -> dict[str, float]:
-    """Counters of one call summed over its spans in each timed pass, then
-    the median over passes; 0 for a call the workload does not make.
+    """Counters of one call summed over its spans in each timed pass that
+    makes it, then the median over those passes; 0 for a call the workload
+    does not make.
 
     Status-tracker counters always; with ``logs`` also the event-log ones."""
     keys = STATUS_COUNTERS + (TRACED_COUNTERS if logs is not None else ())
     per_pass = []
-    for p in sorted({s.pass_no for s in rec.spans if s.pass_no >= 0}):
+    for p in sorted({s.pass_no for s in rec.spans if s.pass_no >= 0 and s.call == call}):
         totals = dict.fromkeys(keys, 0)
         for span in (s for s in rec.spans if s.call == call and s.pass_no == p):
             for k, v in span.status.items():
@@ -253,4 +254,6 @@ def call_counters(rec: Recorder, call: str, logs: dict[str, GroupLog] | None = N
             totals["broadcast_joins"] += g.broadcast_joins
             totals["shuffled_hash_joins"] += g.shuffled_hash_joins
         per_pass.append(totals)
+    if not per_pass:
+        return dict.fromkeys(keys, 0)
     return {k: statistics.median(t[k] for t in per_pass) for k in keys}
