@@ -226,17 +226,15 @@ def materialize(df: DataFrame, observed: bool = False) -> DataFrame:
     (the count only reads checkpoint blocks); the unobserved path folds
     checkpoint and cache materialization into the single count job.
     """
-    out = df.localCheckpoint(eager=observed).persist()
-    out.count()
-    return out
+    return materialize_counted(df, observed)[0]
 
 
-def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
+def materialize_counted(df: DataFrame, observed: bool = False) -> tuple[DataFrame, int]:
     """``materialize`` that also returns the row count of the single
     materialization job. Fixpoint kernels that drive convergence or
     join-side policy off the live-set size otherwise pay a second count
     job per round for a number the materialization job already computed."""
-    out = df.localCheckpoint(eager=False).persist()
+    out = df.localCheckpoint(eager=observed).persist()
     n = out.count()
     return out, n
 

@@ -20,7 +20,7 @@ SQL engine; floats appear only in the final one-row-per-t estimate.
 
 Spark plan per round: one join of the (id → R mask columns) state with the
 dst-partitioned cached edge table + one groupBy(src) BIT_OR — V-row state
-shuffles, the edge table streams in place (pagerank.py policy). State is
+shuffles, the edge table streams in place (fixpoint.state_side). State is
 V rows × R longs regardless of graph size; at 100 TB this is the ONLY
 per-node sketch whose round cost matches plain BFS while answering "how
 big is the t-ball" for every node at once.
@@ -37,6 +37,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import token_hash
 from ..graph import DST, SRC, nodes_of
+from ..plans.fixpoint import state_side
 
 FM_PHI = 0.77351  # Flajolet–Martin bias correction
 
@@ -95,17 +96,12 @@ def neighborhood_function(
             ).alias("avg_reach")
         ).select(F.lit(t).alias("t"), "avg_reach")
 
-    tiny = n_nodes <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
-
     out = estimate(state, 0)
     for t in range(1, max_t + 1):
         nbr = (
             e.join(
-                _hint(
-                    state.select(F.col("id").alias(DST), *masks)
+                state_side(
+                    state.select(F.col("id").alias(DST), *masks), n_nodes
                 ),
                 DST,
             )
@@ -227,14 +223,9 @@ def _hyperball_centralities(
     )
     state.count()
 
-    tiny = n_nodes <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
-
     for t in range(1, max_t + 1):
         nbr = (
-            e.join(_hint(state.select(F.col("id").alias(DST), *masks)), DST)
+            e.join(state_side(state.select(F.col("id").alias(DST), *masks), n_nodes), DST)
             .groupBy(F.col(SRC).alias("id"))
             .agg(*[F.expr(f"bit_or({m})").alias(f"o{m}") for m in masks])
         )

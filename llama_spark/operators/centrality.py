@@ -5,7 +5,7 @@ link-analysis scores next to PageRank (operators/pagerank.py) and HITS
     katz:        x'(v) = beta + alpha * Σ_{u→v} x(u)        (no normalize)
     eigenvector: x'(v) = Σ_{u→v} x(u) / L1-total             (power method)
 
-Spark plan per iteration (pagerank.py policy): the edge table is cached
+Spark plan per iteration (fixpoint.state_side): the edge table is cached
 hash-partitioned by ``src`` and STREAMED; only the V-row score vector
 shuffles. Katz's state is referenced ONCE per step, so it rides the
 shared fixpoint driver; eigenvector's raw gather is referenced twice
@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..graph import DST, SRC, materialize, nodes_of
-from ..plans.fixpoint import FixpointResult, IterationMetrics, iterate
+from ..plans.fixpoint import FixpointResult, IterationMetrics, iterate, state_side
 
 
 def _cached_edges(edges: DataFrame, p: int) -> DataFrame:
@@ -59,16 +59,12 @@ def katz_centrality(
     if n == 0:
         return nodes.select("id", F.lit(0.0).alias("katz"))
     e = _cached_edges(edges, p)
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     init = nodes.select("id", F.lit(beta).alias("x"))
 
     def step(state: DataFrame, i: int) -> DataFrame:
         contrib = (
-            e.join(_hint(state.select(F.col("id").alias(SRC), "x")), SRC)
+            e.join(state_side(state.select(F.col("id").alias(SRC), "x"), n), SRC)
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum("x").alias("s"))
         )
@@ -104,10 +100,6 @@ def eigenvector_centrality(
             state=empty, iterations=0, converged=True, metrics=[], n_nodes=0
         )
     e = _cached_edges(edges, p)
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     state = materialize(nodes.select("id", F.lit(1.0 / n).alias("score")))
     metrics: list[IterationMetrics] = []
@@ -115,7 +107,7 @@ def eigenvector_centrality(
     for i in range(max_iter):
         t0 = time.time()
         raw = (
-            e.join(_hint(state.select(F.col("id").alias(SRC), "score")), SRC)
+            e.join(state_side(state.select(F.col("id").alias(SRC), "score"), n), SRC)
             .groupBy(F.col(DST).alias("id"))
             .agg(F.sum("score").alias("s"))
             .persist(StorageLevel.MEMORY_AND_DISK)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import DST, SRC, symmetrize
+from ..plans.fixpoint import state_side, tiny_state
 
 
 def k_core(
@@ -72,22 +73,18 @@ def k_core(
     n_edges = und.count()
     und_is_persisted = True
 
-    def _keep_hint(df: DataFrame) -> DataFrame:
-        # node-keyed keep list: ≤ V ≤ current edge count rows. The bound is
-        # re-read from the CURRENT round's n_edges (not frozen at entry) so
-        # a graph whose core collapses flips from shuffled-hash joins to
-        # broadcast once the surviving edge set is small enough.
-        return F.broadcast(df) if n_edges <= 100_000 else df.hint("shuffle_hash")
-
     limit = rounds if rounds is not None else max_iter
     for _i in range(limit):
         if n_edges == 0:
             break
         deg = und.groupBy(SRC).agg(deg_agg.alias(out_col))
         keep = deg.filter(F.col(out_col) >= k).select(SRC)
+        # node-keyed keep list: ≤ V ≤ current edge count rows. Sized by
+        # the CURRENT round's n_edges, so a graph whose core collapses
+        # flips from shuffled-hash joins to broadcast.
         pruned = (
-            und.join(_keep_hint(keep), SRC, "left_semi")
-            .join(_keep_hint(keep.withColumnRenamed(SRC, DST)), DST, "left_semi")
+            und.join(state_side(keep, n_edges), SRC, "left_semi")
+            .join(state_side(keep.withColumnRenamed(SRC, DST), n_edges), DST, "left_semi")
         )
         if _i % 4 == 3:
             pruned = pruned.localCheckpoint(eager=True)
@@ -192,18 +189,12 @@ def coreness(
     _row = c.agg(F.count(F.lit(1)).alias("n"), F.max("c").alias("m")).head()
     n = int(_row[0])
     max_deg = int(_row[1] or 0)
-    tiny_state = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # broadcast the V-row value vector while tiny so the edge table's
-        # join needs no exchange at all; else shuffled-hash (edges stream)
-        return F.broadcast(df) if tiny_state else df.hint("shuffle_hash")
 
     w = Window.partitionBy("id").orderBy(F.desc("value"))
     limit = rounds if rounds is not None else max_iter
     changed_ids = None  # None → full-recompute round (round 0 / big frontier)
     for _ in range(limit):
-        joined = _hint(c).join(und, c["id"] == und[SRC])
+        joined = state_side(c, n).join(und, c["id"] == und[SRC])
         if changed_ids is not None:
             aff = (
                 und.join(
@@ -215,7 +206,7 @@ def coreness(
                 .distinct()
             )
             joined = joined.join(F.broadcast(aff), DST, "left_semi")
-        if tiny_state:
+        if tiny_state(n):
             # single-shuffle h-index: fold the per-node sorted neighbor
             # value list in one expression — one exchange per round
             # instead of the histogram+window pair (the trussness round

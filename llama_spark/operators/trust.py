@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.fixpoint import state_side
 from .pagerank import pagerank_result, personalized_pagerank_result
 
 
@@ -150,10 +151,6 @@ def sybilrank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ew.count()
-    tiny = n <= 100_000
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if tiny else df.hint("shuffle_hash")
 
     init = nodes.select(
         "id",
@@ -164,12 +161,12 @@ def sybilrank(
 
     def step(t: DataFrame, _i: int) -> DataFrame:
         gathered = (
-            _hint(t).join(ew, t["id"] == ew[SRC])
+            state_side(t, n).join(ew, t["id"] == ew[SRC])
             .select(F.col(DST).alias("id"), (F.col("inv") * F.col("t")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        return nodes.join(_hint(gathered), "id", "left").select(
+        return nodes.join(state_side(gathered, n), "id", "left").select(
             "id", F.coalesce("s", F.lit(0.0)).alias("t")
         )
 

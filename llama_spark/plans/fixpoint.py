@@ -28,6 +28,7 @@ from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 MANIFEST = "manifest.json"
@@ -38,12 +39,34 @@ from itertools import count as _obs_count
 
 _OBS_SEQ = _obs_count()
 
+# Join-side policy for per-round state, LLAMA's adaptive small-frontier
+# mode (ll_bfs_template.h:170-292): broadcast the state while it is tiny so
+# the cached edge table streams with no exchange. Past about 100k rows the
+# driver-serial broadcast build dominates (measured on betweenness: a
+# 550k-row broadcast state took 25.8 s for 3 iterations, shuffled-hash
+# 11.9 s), so the state side gets a shuffled-hash join instead: the cached
+# edge table streams unsorted (sort-merge would re-sort every edge each
+# round) and only the state side shuffles. Operators go through
+# ``tiny_state`` / ``state_side``, which read this at call time.
+TINY_STATE_ROWS = 100_000
+
+
+def tiny_state(rows: int) -> bool:
+    """True while a state of ``rows`` rows takes the broadcast side."""
+    return rows <= TINY_STATE_ROWS
+
+
+def state_side(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` hinted for its join: broadcast when ``rows`` is tiny, else
+    shuffled-hash."""
+    return F.broadcast(df) if tiny_state(rows) else df.hint("shuffle_hash")
+
 
 @dataclass
 class IterationMetrics:
     iteration: int
     seconds: float
-    rows: int
+    rows: int | None  # None on a truncation iteration without a checkpoint
     updated: int | None = None  # convergence delta, if the kernel tracks one
     checkpoint_path: str | None = None
     partition_rows: list[int] | None = None  # per-partition state sizes
@@ -146,7 +169,7 @@ def iterate(
         # Materialize this iteration's plan now — ONE job: either the eager
         # localCheckpoint (truncation iterations) or a count() that builds
         # the persisted cache. The convergence probe rides that same job
-        # via observe; row counts are taken opportunistically.
+        # via observe; a persist iteration's count() is its row count.
         obs = None
         if updated_metric is not None:
             from pyspark.sql import Observation
@@ -159,11 +182,11 @@ def iterate(
         if (it - start_iter) % truncate_every == truncate_every - 1:
             new_state = new_state.localCheckpoint(eager=True)
             state_is_persisted = False
+            rows = None
         else:
             new_state = new_state.persist(StorageLevel.MEMORY_AND_DISK)
-            new_state.count()
+            rows = new_state.count()
             state_is_persisted = True
-        rows = -1
 
         updated = None
         if obs is not None:
@@ -175,17 +198,15 @@ def iterate(
         m = IterationMetrics(iteration=it, seconds=time.time() - t0, rows=rows, updated=updated)
 
         if checkpoint_dir and (it % checkpoint_every == checkpoint_every - 1 or it == max_iter - 1):
-            rows = new_state.count()
+            if m.rows is None:
+                m.rows = new_state.count()
             path = os.path.join(checkpoint_dir, f"iter_{it:05d}")
             new_state.write.mode("overwrite").parquet(path)
             # durable state replaces the in-memory one (also frees executor mem)
             new_state.unpersist()
             new_state = spark.read.parquet(path)
             state_is_persisted = False
-            m.rows = rows
             m.checkpoint_path = path
-            from pyspark.sql import functions as F
-
             m.partition_rows = [
                 r["count"]
                 for r in new_state.groupBy(F.spark_partition_id().alias("pid"))
@@ -215,5 +236,5 @@ def iterate(
         state = final
 
     return FixpointResult(
-        state=state, iterations=it + 1 - 0, converged=converged, metrics=metrics
+        state=state, iterations=it + 1, converged=converged, metrics=metrics
     )

@@ -37,10 +37,48 @@ def graph(request, spark):
     return request.param, pairs, edges_df(spark, pairs)
 
 
-def test_pagerank_allclose(graph):
+# Every micro-graph sits under the tiny-state threshold, so the default
+# runs only the broadcast side of plans.fixpoint.state_side; a threshold
+# of 0 drives the same kernels down the shuffled-hash (big-state) side.
+STATE_CASES = [(g, None) for g in GRAPHS] + [
+    (g, 0) for g in ("star_hub", "two_islands", "rmat_s8")
+]
+
+
+@pytest.fixture(
+    params=STATE_CASES,
+    ids=[g if rows is None else f"{g}-big_state" for g, rows in STATE_CASES],
+)
+def state_graph(request, spark, monkeypatch):
+    name, rows = request.param
+    if rows is not None:
+        from llama_spark.plans import fixpoint
+
+        monkeypatch.setattr(fixpoint, "TINY_STATE_ROWS", rows)
+    pairs = GRAPHS[name]
+    return name, pairs, edges_df(spark, pairs)
+
+
+def test_state_side_policy(spark, monkeypatch):
+    from llama_spark.plans import fixpoint
+
+    small = edges_df(spark, K3)
+
+    def join_plan():
+        joined = small.join(fixpoint.state_side(small.select("src"), len(K3)), "src")
+        return joined._jdf.queryExecution().executedPlan().toString()
+
+    assert fixpoint.tiny_state(fixpoint.TINY_STATE_ROWS)
+    assert not fixpoint.tiny_state(fixpoint.TINY_STATE_ROWS + 1)
+    assert "BroadcastHashJoin" in join_plan()
+    monkeypatch.setattr(fixpoint, "TINY_STATE_ROWS", 0)
+    assert "ShuffledHashJoin" in join_plan()
+
+
+def test_pagerank_allclose(state_graph):
     from llama_spark.operators.pagerank import pagerank
 
-    name, pairs, df = graph
+    name, pairs, df = state_graph
     got = {r["id"]: r["rank"] for r in pagerank(df, max_iter=10).collect()}
     want = oracle.pagerank(pairs, max_iter=10)
     assert set(got) == set(want)
@@ -532,10 +570,10 @@ def test_coreness(spark):
         assert got == py_coreness(pairs), "coreness mismatch"
 
 
-def test_connected_components(graph):
+def test_connected_components(state_graph):
     from llama_spark.operators.components import connected_components
 
-    name, pairs, df = graph
+    name, pairs, df = state_graph
     got = {r["id"]: r["component"] for r in connected_components(df).collect()}
     assert got == oracle.connected_components(pairs), name
 
@@ -556,10 +594,10 @@ def test_star_hub_cc_converges_fast(spark):
     assert res.iterations <= 3  # 1 propagation round + 1 no-change round (+slack)
 
 
-def test_label_propagation(graph):
+def test_label_propagation(state_graph):
     from llama_spark.operators.components import label_propagation
 
-    name, pairs, df = graph
+    name, pairs, df = state_graph
     got = {r["id"]: r["label"] for r in label_propagation(df, max_iter=5).collect()}
     assert got == oracle.label_propagation(pairs, max_iter=5), name
 
@@ -625,11 +663,11 @@ def test_multi_source_bfs_and_closeness(spark):
     assert row["diameter_lb"] == 9 and row["peripheral_id"] in (0, 9)
 
 
-def test_sssp_weighted(graph):
+def test_sssp_weighted(state_graph):
     from llama_spark.graph import with_synthetic_weights
     from llama_spark.operators.traversal import sssp
 
-    name, pairs, df = graph
+    name, pairs, df = state_graph
     root = min(u for e in pairs for u in e)
     wdf = with_synthetic_weights(df)
     weights = {(s, d): 1.0 + ((s * 31 + d) % 100) / 100.0 for s, d in pairs}
